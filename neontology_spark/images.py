@@ -21,9 +21,9 @@ Scale notes:
 * The payload check reads (image_id, bytes, w, h, fmt, caption, part)
   only; stats/uniqueness checks never touch ``bytes`` (column pruning —
   verified in tests via the physical plan's ReadSchema).
-* PSNR runs in ``mapInPandas`` over Arrow batches: numpy-vectorized per
-  batch, zero per-row Python in the hot loop beyond the per-image decode
-  (bounded, reconstructable from width*height).
+* PSNR runs in ``mapInArrow`` over Arrow batches: numpy-vectorized per
+  batch over zero-copy pixel views, zero per-row Python in the hot loop
+  beyond the per-image decode (bounded, reconstructable from width*height).
 * ``phash`` is synthesized with a hot-key cluster (FIXTURES.md) to
   exercise the salted duplicate-key aggregation path.
 """
@@ -256,56 +256,6 @@ PAYLOAD_DDL = (
 )
 
 
-def payload_check_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: decode each blob, PSNR vs the reference pixels
-    (re-derived from the row's deterministic seed — in a real deployment
-    this would be the original/reference decode), plus caption equality.
-
-    Arrow hands us columnar batches; numpy does the pixel math. The only
-    Python-level loop is per image (unavoidable: variable-size buffers),
-    and each iteration is pure numpy on the whole pixel plane.
-    """
-    for pdf in it:
-        n = len(pdf)
-        psnr = np.full(n, np.nan)
-        ok = np.zeros(n, dtype=bool)
-        # vectorized row-identity extraction (per-row python here costs
-        # more than the pixel math at 10^6+ rows)
-        row_ids = (
-            pdf["image_id"].str.rsplit("_", n=1).str[-1].astype(np.int64)
-        )
-        blobs = pdf["bytes"].to_numpy()
-        for k in range(n):
-            px = _decode(blobs[k])
-            if px is None:
-                continue
-            ok[k] = True
-            # reference pixels keyed by the *row identity* encoded in
-            # image_id (deterministic stand-in for a golden decode)
-            ref = _pixels(int(row_ids[k]), px.shape[1], px.shape[0])
-            if ref.shape != px.shape:
-                ok[k] = False
-                continue
-            # integer MSE: int16 diff + int32 square keeps memory traffic
-            # ~5x below the float64 formulation (the PSNR stage is memory-
-            # bandwidth-bound at high core counts, measured in BENCH)
-            diff = px.astype(np.int16)
-            diff -= ref
-            mse = float(np.square(diff, dtype=np.int32).mean())
-            psnr[k] = np.inf if mse == 0 else 20 * np.log10(255.0) - 10 * np.log10(mse)
-        golden = "a synthetic image number " + row_ids.astype(str)
-        cap_ok = (pdf["caption"] == golden).fillna(False).to_numpy()
-        yield pd.DataFrame(
-            {
-                "part": pdf["part"],
-                "image_id": pdf["image_id"],
-                "psnr": psnr,
-                "decode_ok": ok,
-                "caption_ok": cap_ok,
-            }
-        )
-
-
 def _score_record_batch(batch, sample_rows: Optional[int] = None):
     """Score one Arrow RecordBatch of (part, image_id, bytes, caption) —
     shared core of the exchange-based and direct-read payload kernels.
@@ -497,14 +447,6 @@ def _score_record_batch_sampled(batch, sample_rows: int, only_violations: bool =
     return out
 
 
-def payload_check_arrow(it):
-    """mapInArrow kernel — exchange-based path: Arrow RecordBatches of
-    (part, image_id, bytes, caption) arrive from the JVM; each is scored
-    zero-copy (no pandas, no per-row python bytes objects)."""
-    for batch in it:
-        yield _score_record_batch(batch)
-
-
 def make_payload_files_kernel(sample_rows: Optional[int] = None):
     """mapInArrow kernel factory — DIRECT-READ path: input batches carry
     parquet file PATHS; the worker opens each file with pyarrow (C++
@@ -540,11 +482,6 @@ def make_payload_files_kernel(sample_rows: Optional[int] = None):
     return kernel
 
 
-def payload_files_kernel(it):
-    """Back-compat alias: full-plane direct-read kernel."""
-    yield from make_payload_files_kernel(None)(it)
-
-
 def check_payload_files(
     spark, table_path: str, sample_rows: Optional[int] = None
 ) -> DataFrame:
@@ -574,33 +511,30 @@ def check_payload_files(
 
 
 def check_payload(
-    images: DataFrame, use_arrow: bool = True, sample_rows: Optional[int] = None
+    images: DataFrame, sample_rows: Optional[int] = None
 ) -> DataFrame:
     """Violation rows for the payload invariants, VIOLATION_SCHEMA-shaped.
 
     Projects to the needed columns *before* the UDF so Arrow ships only
     (part, image_id, bytes, caption) — w/h/fmt/phash never cross the
-    Python boundary. ``use_arrow`` selects the zero-copy mapInArrow
-    kernel (default; ~4× less Python-side overhead than mapInPandas on
-    binary-heavy rows); the pandas kernel is kept as the readable
-    reference implementation and exercised in tests for parity.
-    ``sample_rows`` (arrow path) selects the row-sampled PSNR estimator.
+    Python boundary — and scores each batch zero-copy in one mapInArrow
+    kernel (~4× less Python-side overhead than mapInPandas on
+    binary-heavy rows; the pandas form survives as the parity reference
+    in tests/test_image_checks.py).
+    ``sample_rows`` selects the row-sampled PSNR estimator.
     """
     projected = images.select("part", "image_id", "bytes", "caption")
-    if use_arrow:
 
-        def kern(it):
-            for batch in it:
-                if sample_rows is None:
-                    yield _score_record_batch(batch)
-                else:
-                    yield _score_record_batch_sampled(
-                        batch, sample_rows, only_violations=True
-                    )
+    def kern(it):
+        for batch in it:
+            if sample_rows is None:
+                yield _score_record_batch(batch)
+            else:
+                yield _score_record_batch_sampled(
+                    batch, sample_rows, only_violations=True
+                )
 
-        scored = projected.mapInArrow(kern, schema=PAYLOAD_DDL)
-    else:
-        scored = projected.mapInPandas(payload_check_batches, schema=PAYLOAD_DDL)
+    scored = projected.mapInArrow(kern, schema=PAYLOAD_DDL)
     return _payload_violations(scored)
 
 

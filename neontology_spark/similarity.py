@@ -1,16 +1,26 @@
-"""Similarity search over embedding columns (array<float>): brute-force
-cosine top-k (the exact baseline) and an LSH-bucketed approximate variant
-(the scale path).
+"""Similarity search over embedding columns (array<float>): exact cosine
+top-k, IVF ANN (flat and two-level quantizers, over the in-memory corpus
+or a persisted partitioned inverted file), hyperplane-LSH top-k and
+embedding near-duplicate pairs.
 
 Scale design:
-* brute-force: query set × corpus — broadcast the (small) query side, dot
-  products via zip_with/aggregate (JVM-side), per-query top-k via
-  window row_number. Exact; cost O(|Q|·N) — the baseline you verify the
-  ANN against, and the right tool when |Q| is small.
+* exact and IVF top-k share ONE probe → rerank → top-k path. The probe
+  (``_probe``) collects the query side once on the driver, drops NULL
+  query vectors and ranks each query's cells with the dim-order float64
+  dots of the JVM fold; a source yields the corpus rows — in memory, or
+  the persisted index read with a static partition filter built from the
+  probed cells — and NULL corpus vectors are dropped once, before the
+  kernel; ``_rerank_topk`` scores every corpus row against the queries
+  probing its cell in ONE Arrow pass (``_probe_rerank_arrow``: corpus
+  vectors cross the boundary once, the query side rides the task
+  closure) and keeps each query's top k by (cos desc, vec_id asc).
+  Brute force is the probe with no cells — every query probes the single
+  cell ``()`` — so its cost is O(|Q|·N): the exact baseline the ANN is
+  verified against, and the right tool when |Q| is small.
 * LSH (random hyperplanes): h-bit signature per vector; planes are
   deterministic pseudo-random values derived from sha256(plane, dim) —
   no driver-side RNG state, fully reproducible across runs and engines.
-  The plane/centroid matrices ride a broadcast one-row relation as a
+  The plane matrix rides a broadcast one-row relation as a
   single array<array<double>> column (NOT per-cell plan literals —
   VERDICT r3 #1: literals were 10^5-10^6 plan nodes at production dims).
   Candidates = vectors sharing a
@@ -22,11 +32,26 @@ Scale design:
 
 from __future__ import annotations
 
+import sys
+from functools import reduce
 from typing import NamedTuple, Optional
 
+import numpy as np
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
+
+# the Arrow kernels call this module's _dim_dots/_dim_norms: pickle them
+# by value, so Python workers never need to import this package
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 # ---------------------------------------------------------------------------
@@ -52,6 +77,32 @@ def _spread(df: DataFrame) -> DataFrame:
     # min_bytes=0: vector folds are heavy per byte — spreading pays for
     # itself even on sub-MB embedding tables
     return spread_to_parallelism(df, min_bytes=0)
+
+
+def _dim_dots(X, C):
+    """(n, m) float64 dots of X's rows with C's rows, accumulated per
+    DIMENSION left to right —
+
+        acc = ((0 + x0*c0) + x1*c1) + ...
+
+    — the exact IEEE sequence of the JVM fold
+    ``aggregate(zip_with(a, b, *), 0.0, +)`` (BLAS ``X @ C.T`` blocks
+    its sums and differs in the last ulp). Every probe, assignment and
+    rerank dot in this module goes through here, so the driver-side
+    probe, the Arrow kernels and the expression form agree bit for bit."""
+    acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
+    for d in range(X.shape[1]):
+        acc = acc + X[:, d : d + 1] * C[:, d][None, :]
+    return acc
+
+
+def _dim_norms(X):
+    """Row norms with ``_norm``'s per-dimension float64 sum of squares
+    and IEEE sqrt."""
+    sq = np.zeros(X.shape[0], dtype=np.float64)
+    for d in range(X.shape[1]):
+        sq = sq + X[:, d] * X[:, d]
+    return np.sqrt(sq)
 
 
 def _score_pairs_arrow(
@@ -82,15 +133,12 @@ def _score_pairs_arrow(
     ``keep`` columns pass through untouched; the input must have
     non-NULL fixed-dimension vectors (candidate generation drops NULLs
     upstream — enforced with a fail-fast assert here)."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     sel = df.select(*keep, a_vec, b_vec, a_norm, b_norm)
     out_schema = StructType(
         [sel.schema[c] for c in keep] + [StructField(out, DoubleType(), True)]
     )
 
     def kernel(batches):
-        import numpy as np
         import pyarrow as pa
 
         def mat(tbl, name):
@@ -130,60 +178,42 @@ def _score_pairs_arrow(
 
 def _probe_rerank_arrow(
     inv: DataFrame,
-    probe_rows,
-    key_cols: list[str],
-    id_col: str = "vec_id",
-    vec_col: str = "cv",
-    norm_col: str = "_cn",
+    probes: dict,
+    key_cols: tuple[str, ...],
     assign_matrix: Optional[list[list[float]]] = None,
 ) -> DataFrame:
-    """Score every inverted-file row against the queries probing its
-    cell, in ONE Arrow pass over the CORPUS rows — (query_id, vec_id,
-    cos) pair rows out.
+    """Score every corpus row of ``inv`` (vec_id, cv, *key_cols) against
+    the queries probing its cell, in ONE Arrow pass over the CORPUS rows
+    — (query_id, vec_id, cos) pair rows out.
 
     The candidate-pair join this replaces attached a full copy of the
     query vector to every candidate row, so the scoring stage moved
     |pairs| x dim vector bytes (JVM -> Python or through codegen'd
     buffers); here the corpus vectors cross the boundary exactly once
-    and the query set rides the task closure — the same residency
-    contract as the broadcast hash join it replaces (the query side of
-    every top-k API here is already collected/broadcast by design).
-    ``probe_rows`` are collected (query_id, qv, _qn, *key_cols) rows —
-    at most |Q| x n_probe of them.
+    and the query side rides the task closure — the same residency
+    contract as a broadcast hash join. ``probes`` is ``_probe``'s
+    {cell key: (query ids, query vectors, query norms)} — at most
+    |Q| x n_probe query rows in total.
 
-    Bit-exactness: per (corpus row, query) the dot is accumulated
-    per-DIMENSION in float64 —
-        acc = ((0 + a0*b0) + a1*b1) + ...
-    the exact IEEE sequence of ``aggregate(zip_with(a, b, *), 0.0, +)``
-    — and cos = dot / (qn * cn) with one multiply then one divide, so
-    results are bit-identical to the expression form (pytest-asserted).
-    Self-pairs (vec_id == query_id) are NOT filtered here; callers keep
-    their JVM-side filter.
+    Bit-exactness: dots and norms come from ``_dim_dots``/``_dim_norms``
+    (the JVM fold's IEEE sequence) and cos = dot / (qn * cn) with one
+    multiply then one divide, so results are bit-identical to the
+    expression form (pytest-asserted). Self-pairs (vec_id == query_id)
+    are NOT filtered here; ``_rerank_topk`` filters them JVM-side. The
+    input must carry no NULL vectors (the source drops them).
 
-    ``assign_matrix``: when given, ``inv`` carries only (id, vector) and
-    the kernel ALSO computes each row's cell key (dim-loop dots +
-    first-max argmax — the identical values and tie rule of the JVM
-    ``_with_dots``/``_cluster_from_dots`` assignment, so the exact-dup
-    consistency hook is preserved bit-for-bit) and its norm (dim-loop
-    sum of squares + IEEE sqrt = ``_norm``). Assignment + norm + scoring
-    then cost ONE pass over the corpus instead of an interpreted
-    assignment projection feeding a separate scoring stage."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    # cell key -> (qids int64[m], Q float64[m, dim], qn float64[m])
-    by_key: dict = {}
-    for r in probe_rows:
-        k = tuple(r[c] for c in key_cols)
-        by_key.setdefault(k, []).append(
-            (r["query_id"], [float(x) for x in r["qv"]], float(r["_qn"]))
-        )
-
+    ``assign_matrix``: when given, ``inv`` carries only (vec_id, cv) and
+    the kernel ALSO computes each row's cell key — dim-order dots +
+    first-max argmax, the identical values and tie rule of the JVM
+    ``_dots_from_matrix``/``_cluster_from_dots`` assignment, so the
+    exact-dup consistency hook is preserved bit-for-bit. Assignment,
+    norm and scoring then cost ONE pass over the corpus."""
     if assign_matrix is not None:
-        assert len(key_cols) == 1, "in-kernel assignment is single-level"
-        sel = inv.select(id_col, vec_col)
+        sel = inv.select("vec_id", "cv")
+        C = np.asarray(assign_matrix, dtype=np.float64)
     else:
-        sel = inv.select(*key_cols, id_col, vec_col, norm_col)
-    C0 = assign_matrix
+        sel = inv.select(*key_cols, "vec_id", "cv")
+        C = None
     out_schema = StructType(
         [
             StructField("query_id", LongType(), False),
@@ -193,81 +223,49 @@ def _probe_rerank_arrow(
     )
 
     def kernel(batches):
-        import numpy as np
         import pyarrow as pa
 
-        packed = {
-            k: (
-                np.asarray([q[0] for q in qs], dtype=np.int64),
-                np.asarray([q[1] for q in qs], dtype=np.float64),
-                np.asarray([q[2] for q in qs], dtype=np.float64),
-            )
-            for k, qs in by_key.items()
-        }
-        C = (
-            np.asarray(C0, dtype=np.float64) if C0 is not None else None
-        )
         for tbl in batches:
             n = tbl.num_rows
             if n == 0:
                 continue
-            vecs = tbl.column(vec_col)
-            if vecs.null_count:
-                raise ValueError("_probe_rerank_arrow: NULL corpus vector")
-            flat = vecs.flatten().to_numpy(zero_copy_only=False)
-            dim = len(flat) // n
-            X = flat.reshape(n, dim).astype(np.float64, copy=False)
-            vids = tbl.column(id_col).to_numpy(zero_copy_only=False)
+            flat = tbl.column("cv").flatten().to_numpy(zero_copy_only=False)
+            X = flat.reshape(n, -1).astype(np.float64, copy=False)
+            vids = tbl.column("vec_id").to_numpy(zero_copy_only=False)
+            cns = _dim_norms(X)
             if C is not None:
-                # in-kernel assignment + norm: same dim-loop float64
-                # sequence as the JVM expressions (argmax = first max,
-                # like array_position)
-                dots = np.zeros((n, C.shape[0]), dtype=np.float64)
-                sq = np.zeros(n, dtype=np.float64)
-                for d in range(dim):
-                    dots = dots + X[:, d : d + 1] * C[:, d][None, :]
-                    sq = sq + X[:, d] * X[:, d]
-                assigned = np.argmax(dots, axis=1)
-                cns = np.sqrt(sq)
-                groups: dict = {}
-                for c in np.unique(assigned):
-                    groups[(int(c),)] = np.nonzero(assigned == c)[0].tolist()
+                keys = np.argmax(_dim_dots(X, C), axis=1)[:, None]
+            elif key_cols:
+                keys = np.column_stack(
+                    [tbl.column(c).to_numpy(zero_copy_only=False) for c in key_cols]
+                )
             else:
-                cns = tbl.column(norm_col).to_numpy(zero_copy_only=False)
-                if key_cols:
-                    keys = [
-                        tbl.column(c).to_numpy(zero_copy_only=False)
-                        for c in key_cols
-                    ]
-                    row_keys = list(zip(*[k.tolist() for k in keys]))
-                    groups = {}
-                    for i, k in enumerate(row_keys):
-                        groups.setdefault(k, []).append(i)
-                else:
-                    groups = {(): list(range(n))}
-            out_q, out_v, out_c = [], [], []
-            for k, idxs in groups.items():
-                qpack = packed.get(k)
-                if qpack is None:
+                keys = np.zeros((n, 0), dtype=np.int64)
+            cells, row_cell = np.unique(keys, axis=0, return_inverse=True)
+            row_cell = row_cell.reshape(-1)
+            parts = []
+            for j, cell in enumerate(cells):
+                probe = probes.get(tuple(int(x) for x in cell))
+                if probe is None:
                     continue
-                qids, Q, qn = qpack
-                ix = np.asarray(idxs, dtype=np.int64)
-                Xg = X[ix]
-                acc = np.zeros((len(ix), len(qids)), dtype=np.float64)
-                for d in range(dim):
-                    acc = acc + Xg[:, d : d + 1] * Q[:, d][None, :]
-                cos = acc / (qn[None, :] * cns[ix][:, None])
-                m = len(qids)
-                out_q.append(np.tile(qids, len(ix)))
-                out_v.append(np.repeat(vids[ix], m))
-                out_c.append(cos.reshape(-1))
-            if not out_q:
+                qids, Q, qn = probe
+                ix = np.nonzero(row_cell == j)[0]
+                cos = _dim_dots(X[ix], Q) / (qn[None, :] * cns[ix][:, None])
+                parts.append(
+                    (
+                        np.tile(qids, len(ix)),
+                        np.repeat(vids[ix], len(qids)),
+                        cos.reshape(-1),
+                    )
+                )
+            if not parts:
                 continue
+            q, v, c = (np.concatenate(p) for p in zip(*parts))
             yield pa.record_batch(
                 [
-                    pa.array(np.concatenate(out_q), type=pa.int64()),
-                    pa.array(np.concatenate(out_v), type=pa.int64()),
-                    pa.array(np.concatenate(out_c), type=pa.float64()),
+                    pa.array(q, type=pa.int64()),
+                    pa.array(v, type=pa.int64()),
+                    pa.array(c, type=pa.float64()),
                 ],
                 names=["query_id", "vec_id", "cos"],
             )
@@ -284,19 +282,16 @@ def _assign_arrow(
 ) -> DataFrame:
     """(id, vector, cell) in ONE Arrow pass — nearest-centroid assignment
     with the identical float64 dim-loop dots and first-max argmax of the
-    JVM ``_with_dots``/``_cluster_from_dots`` pair (bit-identical cells,
-    so index-vs-probe consistency is unchanged); NULL vectors get a NULL
-    cell like the expression form. Replaces an interpreted per-row
+    JVM ``_dots_from_matrix``/``_cluster_from_dots`` pair (bit-identical
+    cells, so index-vs-probe consistency is unchanged); NULL vectors get
+    a NULL cell like the expression form. Replaces an interpreted per-row
     projection costing ~n_centroids × dim lambda evaluations per row."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
     in_schema = df.select(id_col, vec_col).schema
     out_schema = StructType(
         list(in_schema.fields) + [StructField(out_col, IntegerType(), True)]
     )
 
     def kernel(batches):
-        import numpy as np
         import pyarrow as pa
 
         C = np.asarray(matrix, dtype=np.float64)
@@ -315,12 +310,8 @@ def _assign_arrow(
             cells = np.full(n, -1, dtype=np.int64)
             if m:
                 flat = dense.flatten().to_numpy(zero_copy_only=False)
-                dim = len(flat) // m
-                X = flat.reshape(m, dim).astype(np.float64, copy=False)
-                dots = np.zeros((m, C.shape[0]), dtype=np.float64)
-                for d in range(dim):
-                    dots = dots + X[:, d : d + 1] * C[:, d][None, :]
-                a = np.argmax(dots, axis=1)
+                X = flat.reshape(m, -1).astype(np.float64, copy=False)
+                a = np.argmax(_dim_dots(X, C), axis=1)
                 if valid is None:
                     cells = a
                 else:
@@ -351,7 +342,7 @@ def _with_matrix(df: DataFrame, matrix: list[list[float]], col: str) -> DataFram
     are bit-identical to the literal form.
 
     ``col`` must not collide with an input column (ADVICE r4: a user
-    frame already carrying e.g. ``_cents`` would make the cross join
+    frame already carrying e.g. ``_planes`` would make the cross join
     ambiguous, and the caller's later ``drop(col)`` would silently
     remove the user's data)."""
     if col in df.columns:
@@ -397,6 +388,154 @@ def cosine(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+# ---------------------------------------------------------------------------
+# the shared probe → rerank → top-k path
+# ---------------------------------------------------------------------------
+
+
+def _rank(cands: list, n: int) -> list:
+    """The cells of the ``n`` best (cell, dot) candidates under the probe
+    tie rule (dot desc, cell asc). Candidates arrive in ascending cell
+    order and Python's sort is stable, so equal dots keep that order —
+    the same order as a (dot desc, cell asc) window over the cells."""
+    return [cell for cell, _ in sorted(cands, key=lambda c: -c[1])[:n]]
+
+
+def _probed_fines(fine: DataFrame, coarse_ids: list[int]) -> dict:
+    """{coarse_id: fine centroid matrix} for the probed coarse cells
+    only: at most min(|Q| × n_probe_coarse, k_coarse) fine rows reach the
+    driver, never the whole fine frame (VERDICT r6 #2)."""
+    rows = fine.filter(F.col("coarse_id").isin(coarse_ids)).collect()
+    return {
+        r["coarse_id"]: np.asarray(r["fines"], dtype=np.float64) for r in rows
+    }
+
+
+def _probe(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    coarse: Optional[list[list[float]]] = None,
+    n_probe: int = 0,
+    fine: Optional[DataFrame] = None,
+    n_probe_fine: int = 0,
+) -> dict:
+    """{cell key: (query ids int64[m], query vectors float64[m, dim],
+    query norms float64[m])} — the one driver-side probe.
+
+    Collects the query side once (|Q| rows — the side every top-k API
+    here already keeps driver-resident) and drops NULL query vectors: a
+    NULL query has no cosine to anything, so it gets no output rows (the
+    rule LSH follows, ADVICE r3). Then:
+    * no ``coarse``: brute force — every query probes the one cell ``()``;
+    * flat: each query keeps its ``n_probe`` best cells by (dot desc,
+      cell asc) over the centroid matrix;
+    * two-level (``fine`` given): each query keeps its ``n_probe`` best
+      coarse cells, only those cells' fine rows are fetched, and the
+      (coarse, fine) pairs are ranked by (fine dot desc, coarse asc, fine
+      asc), keeping ``n_probe_fine``.
+    Dots are ``_dim_dots`` — the JVM assignment fold's values — so a
+    query identical to a corpus vector probes that vector's cell."""
+    rows = (
+        queries.select(id_col, vec_col)
+        .filter(F.col(vec_col).isNotNull())
+        .collect()
+    )
+    if not rows:
+        return {}
+    qids = np.asarray([r[0] for r in rows], dtype=np.int64)
+    Q = np.asarray([r[1] for r in rows], dtype=np.float64)
+    if coarse is None:
+        cells = [[()]] * len(rows)
+    else:
+        cdots = _dim_dots(Q, np.asarray(coarse, dtype=np.float64))
+        cells = [
+            _rank([((c,), d) for c, d in enumerate(row)], n_probe) for row in cdots
+        ]
+    if fine is not None:
+        by_coarse: dict = {}
+        for qi, cs in enumerate(cells):
+            for (c,) in cs:
+                by_coarse.setdefault(c, []).append(qi)
+        fines = _probed_fines(fine, sorted(by_coarse))
+        cands: list = [[] for _ in rows]
+        for c in sorted(fines):  # ascending coarse, then fine: the tie order
+            qs = by_coarse[c]
+            for qi, fdots in zip(qs, _dim_dots(Q[qs], fines[c])):
+                cands[qi] += [((c, f), d) for f, d in enumerate(fdots)]
+        cells = [_rank(cs, n_probe_fine) for cs in cands]
+    groups: dict = {}
+    for qi, cs in enumerate(cells):
+        for cell in cs:
+            groups.setdefault(cell, []).append(qi)
+    qn = _dim_norms(Q)
+    return {cell: (qids[ix], Q[ix], qn[ix]) for cell, ix in groups.items()}
+
+
+def _index_source(
+    spark, path: str, key_cols: tuple[str, ...], probes: dict
+) -> DataFrame:
+    """The persisted inverted file, read with a STATIC partition filter
+    built from the probed cells — at most min(|Q| × n_probe, cells)
+    values — so the scan's PartitionFilters skip every unprobed directory
+    at file-listing time (plan-shape asserted in tests). Dynamic
+    partition pruning would achieve the same lazily; the static form is
+    verifiable in the plan and engine-portable."""
+    cells = sorted(probes)
+    if len(key_cols) == 1:
+        pred = F.col(key_cols[0]).isin([c[0] for c in cells])
+    else:  # exact disjunction of per-cell conjunctions
+        pred = F.lit(False)
+        for cell in cells:
+            pred = pred | reduce(
+                lambda a, b: a & b,
+                [F.col(k) == v for k, v in zip(key_cols, cell)],
+            )
+    return _spread(spark.read.parquet(path).filter(pred))
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, vec_id, cos, rank): each query's top k by (cos desc,
+    vec_id asc) — vec_id breaks ties for determinism — with cos rounded
+    to 6 places. The output contract of every top-k API here."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("vec_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
+    )
+
+
+def _rerank_topk(
+    source: DataFrame,
+    probes: dict,
+    k: int,
+    key_cols: tuple[str, ...] = (),
+    assign_matrix: Optional[list[list[float]]] = None,
+) -> DataFrame:
+    """Exact cosine of every probed (query, corpus row) pair in one Arrow
+    pass, self-pairs dropped, top k per query. ``source`` is (vec_id, cv,
+    *key_cols); its NULL vectors are dropped here, once, before the
+    kernel — a NULL corpus vector is never a candidate."""
+    scored = _probe_rerank_arrow(
+        source.filter(F.col("cv").isNotNull()),
+        probes,
+        key_cols,
+        assign_matrix,
+    )
+    return _topk(scored.filter(F.col("vec_id") != F.col("query_id")), k)
+
+
+def _corpus(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The in-memory corpus as a (vec_id, cv) source, spread so the
+    rerank kernel runs at full width."""
+    return _spread(
+        df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"))
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -405,33 +544,11 @@ def brute_force_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine: (query_id, vec_id, cos, rank).
-    Ties broken by vec_id for determinism. Queries broadcast."""
-    # norms once per row, dot per pair (same values/order as the inline
-    # cosine — see ivf_topk)
-    # query side collected — the r5 form broadcast it (same residency);
-    # the corpus crosses the boundary ONCE and the |Q| x N pair explosion
-    # happens inside the Arrow kernel
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    ).collect()
-    # norms AFTER the spread so the per-row fold runs at full parallelism
-    c = _spread(
-        corpus.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
-        )
-    ).withColumn("_cn", _norm(F.col("cv")))
-    scored = _probe_rerank_arrow(c, q_rows, []).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
+    Ties broken by vec_id for determinism. The query side is collected;
+    the corpus crosses the Arrow boundary ONCE and the |Q| x N pair
+    explosion happens inside the rerank kernel."""
+    return _rerank_topk(
+        _corpus(corpus, id_col, vec_col), _probe(queries, id_col, vec_col), k
     )
 
 
@@ -528,42 +645,18 @@ def with_hyperplane_signature(
 ) -> DataFrame:
     """df + hyperplane sign-bit signature column, planes shipped via the
     broadcast matrix column (see ``_with_matrix``) — the plan-bounded
-    form all internal callers use (VERDICT r3 #1)."""
+    form all callers use (VERDICT r3 #1).
+
+    The signature fail-fasts at runtime on any non-NULL row whose vector
+    length != ``dim`` (ADVICE r2: a too-small dim would otherwise
+    NULL-pad every projection and hash all rows to one LSH bucket — a
+    degenerate full cross join); NULL vectors get a NULL signature
+    (ADVICE r3)."""
     dim = dim if dim is not None else _infer_dim(df, vec_col)
     d = _with_matrix(df, _plane_matrix(num_planes, dim), "_planes")
     return d.withColumn(
         out_col, _signature_from_matrix(vec_col, "_planes", dim)
     ).drop("_planes")
-
-
-def hyperplane_signature(vec_col: str, num_planes: int, dim: int):
-    """Array<int> of num_planes sign bits: sign(v · plane_p), each plane a
-    literal weight array. INLINE form for small dims / ad-hoc column use —
-    plans carry num_planes × dim literal nodes, so at production embedding
-    dims (768+) use ``with_hyperplane_signature`` (broadcast matrix column,
-    one plan node) instead; internal callers all do.
-
-    ``dim`` is REQUIRED (ADVICE r2): a too-small dim silently NULL-pads the
-    zip_with projection, every sign bit falls to the otherwise(0) branch,
-    and all rows hash to one LSH bucket — correct results (exact re-rank)
-    but a degenerate full cross join. The expression fail-fasts at runtime
-    on any non-NULL row whose vector length != dim; NULL vectors yield a
-    NULL signature (ADVICE r3)."""
-    planes = _plane_matrix(num_planes, dim)
-
-    def bit(p: int):
-        w = F.array(*[F.lit(x) for x in planes[p]])
-        proj = F.aggregate(
-            F.zip_with(_checked_vec(vec_col, dim), w, lambda x, wi: x * wi),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-        return F.when(proj >= 0, 1).otherwise(0)
-
-    return F.when(
-        F.col(vec_col).isNotNull(),
-        F.array(*[bit(p) for p in range(num_planes)]),
-    )
 
 
 def _explode_bands(df: DataFrame, bands: int, r: int, *keep: str) -> DataFrame:
@@ -635,14 +728,7 @@ def lsh_topk(
     scored = _score_pairs_arrow(
         cand, ["query_id", "vec_id"], "qv", "cv", "_qn", "_cn"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
-    )
+    return _topk(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -651,8 +737,8 @@ def lsh_topk(
 
 
 def _dots_from_matrix(vec_col: str, mat_col: str) -> Column:
-    """Array of dot products v · centroid_c over the broadcast centroid
-    matrix column — one ``transform``, one plan node regardless of
+    """Array of dot products v · centroid_c over a centroid matrix
+    column — one ``transform``, one plan node regardless of
     n_centroids × dim (VERDICT r3 #1; the literal-array form was
     10^5-10^6 plan nodes at n_centroids ~ sqrt(N), dim 768+).
 
@@ -673,21 +759,6 @@ def _dots_from_matrix(vec_col: str, mat_col: str) -> Column:
 
     return F.element_at(
         F.transform(F.array(_f64(F.col(vec_col))), dots), 1
-    )
-
-
-def _with_dots(
-    df: DataFrame, matrix: list[list[float]], vec_col: str, out_col: str
-) -> DataFrame:
-    """df + an array<double> column of v · centroid_c dots via the
-    broadcast one-row matrix relation (plan-bounded at any
-    n_centroids × dim — VERDICT r3 #1). A separate ``withColumn`` step
-    keeps the (non-cheap) dots expression evaluated once even when a
-    downstream argmax references it twice (CollapseProject does not
-    inline non-cheap expressions)."""
-    d = _with_matrix(df, matrix, "_cents")
-    return d.withColumn(out_col, _dots_from_matrix(vec_col, "_cents")).drop(
-        "_cents"
     )
 
 
@@ -719,10 +790,11 @@ def train_ivf_centroids(
     full corpus per action and at 10^12 rows quantizer training would
     dominate the query it accelerates. Tables at or under ``sample_cap``
     train exactly as before (fraction 1, no behavior change at test SFs).
-    The centroid matrix (n_centroids × dim doubles) lives on the driver
-    and enters plans as ONE broadcast array column (``_with_matrix``).
+    NULL vectors are never training points. The centroid matrix
+    (n_centroids × dim doubles) lives on the driver and reaches the
+    executors inside the Arrow kernels' closures.
     ``sample_cap=None`` disables sampling (full-corpus audit mode)."""
-    train = corpus.select(id_col, vec_col)
+    train = corpus.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
     sampled = False
     if sample_cap is not None:
         n = n_rows if n_rows is not None else train.count()
@@ -744,7 +816,6 @@ def train_ivf_centroids(
         .collect()
     )
     centroids = [[float(x) for x in r[vec_col]] for r in init_rows]
-    dim = len(centroids[0]) if centroids else 0
     for _ in range(iters):
         # Lloyd step as ONE Arrow pass emitting per-task partial
         # (cluster, count, sum-vector) rows — ≤ tasks × k rows collected
@@ -754,7 +825,7 @@ def train_ivf_centroids(
         # measured r6); the kernel does the same argmax assignment and
         # float64 sums at numpy speed. Assignment CONSISTENCY between
         # the inverted file and the probe side is what the exact-dup
-        # oracle relies on, and both still use the same JVM expression —
+        # oracle relies on, and both use the dim-order ``_dim_dots`` —
         # training only produces the centroid values.
         by_c = _lloyd_partials_arrow(train, centroids, vec_col)
         centroids = [
@@ -768,27 +839,21 @@ def _lloyd_partials_arrow(
     train: DataFrame, centroids: list[list[float]], vec_col: str
 ) -> dict:
     """One Lloyd recompute: {cluster: mean vector} for non-empty
-    clusters, from per-task partial sums merged on the driver."""
-    import numpy as np
-
+    clusters, from per-task partial sums merged on the driver. ``train``
+    carries no NULL vectors."""
     C = np.asarray(centroids, dtype=np.float64)
 
     def kernel(batches):
-        import numpy as np
         import pyarrow as pa
 
         k, dim = C.shape
         sums = np.zeros((k, dim), dtype=np.float64)
         counts = np.zeros(k, dtype=np.int64)
         for tbl in batches:
-            arr = tbl.column(vec_col)
-            if arr.null_count:
-                keep = ~arr.is_null().to_numpy(zero_copy_only=False)
-                arr = arr.filter(pa.array(keep))
-            n = len(arr)
+            n = tbl.num_rows
             if n == 0:
                 continue
-            flat = arr.flatten().to_numpy(zero_copy_only=False)
+            flat = tbl.column(vec_col).flatten().to_numpy(zero_copy_only=False)
             X = flat.reshape(n, -1).astype(np.float64, copy=False)
             a = np.argmax(X @ C.T, axis=1)
             for c in np.unique(a):
@@ -818,42 +883,6 @@ def _lloyd_partials_arrow(
     return {c: [float(x) for x in s / n] for c, (n, s) in agg.items()}
 
 
-def _collect_probes(
-    queries: DataFrame,
-    cents: list[list[float]],
-    id_col: str,
-    vec_col: str,
-    n_probe: int,
-    key_cols: list[str],
-) -> list[dict]:
-    """Collected probe rows [{query_id, qv, _qn, <key>}] — one row per
-    (query, probed cell). Dots come from the same broadcast-matrix JVM
-    expression as the corpus assignment (the exact-dup consistency hook);
-    ranking the n_centroids-long array happens driver-side with the
-    probe window's exact tie rule (dot desc, cell asc)."""
-    qrows = _with_dots(queries, cents, vec_col, "_dots").select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-        F.col("_dots"),
-    ).collect()
-    key = key_cols[0]
-    out = []
-    for r in qrows:
-        dots = r["_dots"]
-        if dots is None:  # NULL vector — never probed (matches the
-            continue      # posexplode-of-NULL behavior)
-        ranked = [c for c in range(len(dots)) if dots[c] is not None]
-        ranked.sort(key=lambda c: (-dots[c], c))
-        # NULL dots rank last (desc nulls-last), cell-asc among themselves
-        ranked += [c for c in range(len(dots)) if dots[c] is None]
-        for c in ranked[:n_probe]:
-            out.append(
-                {"query_id": r["query_id"], "qv": r["qv"], "_qn": r["_qn"], key: c}
-            )
-    return out
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -872,46 +901,17 @@ def ivf_topk(
     (and probe) the same bucket, so exact-duplicate queries have recall 1
     by construction — the deterministic-oracle hook.
 
-    Scale: the corpus assignment is one column expression (pruned scan +
-    shuffle on cluster id when persisted as a bucketed table); probing
-    replaces the O(N) scan per query with O(N · n_probe / n_centroids)."""
+    Scale: the corpus assignment, norm and scoring are ONE Arrow pass
+    (the rerank kernel assigns each row in-kernel); probing replaces the
+    O(N) scan per query with O(N · n_probe / n_centroids) pair scores."""
     cents = centroids if centroids is not None else train_ivf_centroids(
         corpus, n_centroids, id_col, vec_col, iters, sample_cap=sample_cap
     )
-    n_centroids = len(cents)
-    # corpus assignment and query dot arrays via _with_dots (broadcast
-    # matrix column — plan-bounded at any n_centroids × dim)
-    # per-vector norms are computed ONCE per row (corpus side in the
-    # scan/assignment stage, query side before the probe window) and the
-    # re-rank pays only the dot per candidate pair — cos stays
-    # dot/(qn*cn), the same values in the same order as the inline form,
-    # at a third of the per-pair expression work (measured r6).
-    # query → n_probe nearest centroids: the dot arrays are collected
-    # (|Q| rows — the already-broadcast query side) and ranked in plain
-    # python with the window's exact tie rule (dot desc, cluster asc) —
-    # one driver action instead of explode + window + shuffle
-    probe_rows = _collect_probes(
-        queries, cents, id_col, vec_col, n_probe, ["cluster"]
-    )
-
-    # assignment + norm + scoring fused into the re-rank kernel's single
-    # corpus pass (assign_matrix): the interpreted per-row dots
-    # projection disappears; values/tie rule identical (see kernel doc)
-    inv = _spread(
-        corpus.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
-        )
-    )
-    scored = _probe_rerank_arrow(
-        inv, probe_rows, ["cluster"], assign_matrix=cents
-    ).filter(F.col("vec_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
+    return _rerank_topk(
+        _corpus(corpus, id_col, vec_col),
+        _probe(queries, id_col, vec_col, cents, n_probe),
+        k,
+        assign_matrix=cents,
     )
 
 
@@ -966,37 +966,16 @@ def ivf_topk_indexed(
     """Top-k over a persisted IVF index with STATIC partition pruning.
 
     The set of probed clusters across ALL queries is at most
-    ``n_centroids`` values (tiny, independent of query count), so it is
-    collected and pushed as a literal ``cluster IN (...)`` filter — the
-    scan's PartitionFilters then skip every unprobed directory at file-
-    listing time (plan-shape asserted in tests). Dynamic partition
-    pruning would achieve the same lazily; the static form is verifiable
-    in the plan and engine-portable. Results are identical to
-    ``ivf_topk`` with the same centroids (parity-tested)."""
-    n_centroids = len(centroids)
-    # one collect replaces the r5 eager checkpoint + explode/window +
-    # clusters collect: the query dot arrays are ranked in plain python
-    # with the window's exact tie rule (dot desc, cluster asc), and the
-    # |Q| x n_probe probe set feeds both the static partition filter and
-    # the re-rank kernel's closure
-    probe_rows = _collect_probes(
-        queries, centroids, id_col, vec_col, n_probe, ["cluster"]
-    )
-    clusters = sorted({r["cluster"] for r in probe_rows})
-    assert len(clusters) <= n_centroids
-    inv = _spread(
-        spark.read.parquet(index_path).filter(F.col("cluster").isin(clusters))
-    ).withColumn("_cn", _norm(F.col("cv")))
-    scored = _probe_rerank_arrow(inv, probe_rows, ["cluster"]).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
+    ``n_centroids`` values (tiny, independent of query count), so the
+    probe's cell set becomes a literal ``cluster IN (...)`` filter on the
+    index scan (``_index_source``). Results are identical to ``ivf_topk``
+    with the same centroids (parity-tested)."""
+    probes = _probe(queries, id_col, vec_col, centroids, n_probe)
+    return _rerank_topk(
+        _index_source(spark, index_path, ("cluster",), probes),
+        probes,
+        k,
+        ("cluster",),
     )
 
 
@@ -1008,14 +987,21 @@ def _lsh_params_for_threshold(threshold: float) -> tuple[int, int]:
     miss probability over b bands is (1 - p^r)^b.
 
     * t ≥ 0.999 (near-exact dedup): r = 16 → random-pair collisions
-      ~0.5^16 per band (candidate count stays ~linear in N), while a
-      true pair at t = 0.999 still collides with prob ≥ 1 - 3e-4.
-      The r5 default (r = 4) made EVERY band a 16-bucket hash — ~22% of
-      ALL pairs became candidates, a quadratic blow-up that cost 146 s
-      at sf1.0 (measured; OPTIMIZATION_r06.md).
+      ~0.5^16 per band (candidate count stays ~linear in N). The r5
+      default (r = 4) made EVERY band a 16-bucket hash — ~22% of ALL
+      pairs became candidates, a quadratic blow-up that cost 146 s at
+      sf1.0 (measured; OPTIMIZATION_r06.md).
     * t < 0.999: the historical (16, 4) — r = 4 keeps recall high for
       genuinely-near (not identical) pairs; selectivity is the caller's
       knob via max bucket tuning/threshold.
+
+    The t ≥ 0.999 banding trades recall on near-but-not-identical pairs
+    for that linear candidate count. Exact duplicates (cos = 1, p = 1)
+    always collide, which is what the near-dup oracle relies on. A pair
+    sitting AT the threshold is missed with probability (1 - p^16)^4:
+    1.8e-3 at t = 0.999 (p ≈ 0.9858; r = 4 would miss 1e-5), 5e-4 at
+    t = 0.9995 and 2.4e-5 at t = 0.9999. Pairs above the threshold are
+    missed less often.
     """
     return (64, 4) if threshold >= 0.999 else (16, 4)
 
@@ -1102,13 +1088,16 @@ class TwoLevelIVF(NamedTuple):
     """The two-level quantizer. ``coarse`` (k_coarse × dim doubles) is
     the ONLY driver-resident state; ``fine`` is a DataFrame with one row
     per coarse cell — (coarse_id int, fines array<array<double>>, the
-    cell's ≤ k_fine fine centroids) — that is never collected. Effective
-    cell count is k_coarse × k_fine with driver/broadcast residency
+    cell's ≤ k_fine fine centroids) — that is never collected whole: a
+    query probe fetches only the fine rows of the coarse cells it
+    probed (≤ min(|Q| × n_probe_coarse, k_coarse) rows), and the corpus
+    assignment ships each fine row only to the tasks holding its cell.
+    Effective cell count is k_coarse × k_fine with driver residency
     independent of k_fine: at the production heuristic
     n_cells ≈ sqrt(N) with N = 10^12 and dim 1024, the flat quantizer's
     10^6 × 1024 doubles (~8 GB) of driver+broadcast state shrinks to
-    k_coarse × 1024 (~8 MB), and fine state rides executors as ordinary
-    partitioned rows."""
+    k_coarse × 1024 (~8 MB) plus the probed cells' fine rows, and fine
+    state rides executors as ordinary partitioned rows."""
 
     coarse: list[list[float]]
     fine: DataFrame
@@ -1129,14 +1118,15 @@ def train_ivf_two_level(
     Level 1 reuses ``train_ivf_centroids`` (sampled, driver-bounded —
     k_coarse stays ~10^3 at any corpus size). Level 2 trains each coarse
     cell's fine centroids WHERE THE DATA LIVES: the sample is assigned
-    to coarse cells via the broadcast matrix column, then ONE
+    to coarse cells by the ``_assign_arrow`` kernel, then ONE
     ``applyInPandas`` over ``groupBy(coarse_id)`` runs a small
     deterministic numpy k-means per cell (init = the k_fine rows with
     the smallest xxhash64(id), dot-product assignment, float64 means
     over hash-sorted rows — reproducible under any partitioning). No
     per-cell driver collect exists anywhere: the flat trainer's Lloyd
     ``collect()`` of n_centroids × dim mean rows — the 10^9-row wall at
-    n_centroids = sqrt(10^12) — is gone.
+    n_centroids = sqrt(10^12) — is gone. NULL vectors are never training
+    points.
 
     The fine frame is eagerly local-checkpointed (k_coarse rows): the
     kernel runs exactly once, downstream joins read materialized blocks,
@@ -1149,18 +1139,19 @@ def train_ivf_two_level(
     coarse = train_ivf_centroids(
         corpus, k_coarse, id_col, vec_col, iters, sample_cap, seed, n_rows=n
     )
-    train = corpus.select(id_col, vec_col)
+    train = corpus.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
     if sample_cap is not None:
         if n > sample_cap:
             train = train.sample(fraction=min(1.0, 1.1 * sample_cap / n), seed=seed)
-    assigned = _with_dots(_spread(train), coarse, vec_col, "_dots").select(
-        _cluster_from_dots(F.col("_dots")).alias("coarse_id"),
+    assigned = _assign_arrow(
+        _spread(train), coarse, id_col, vec_col, out_col="coarse_id"
+    ).select(
+        "coarse_id",
         _f64(F.col(vec_col)).alias("_v"),
         F.xxhash64(F.col(id_col)).alias("_h"),
     )
 
     def cell_kmeans(pdf):
-        import numpy as np
         import pandas as pd
 
         pdf = pdf.sort_values("_h", kind="mergesort").reset_index(drop=True)
@@ -1200,21 +1191,21 @@ def assign_two_level(
     """(vec_id, cv, coarse_id, fine_id) — the inverted-file assignment.
 
     Coarse: one ``_assign_arrow`` kernel pass (bit-identical cells to
-    the JVM expression form at numpy speed). Fine: an
-    equi-join on coarse_id against the k_coarse-row fine frame, then one
-    argmax over the joined cell's array. The fine join carries NO
-    broadcast hint (VERDICT r5 #2): each fine row is k_fine × dim
+    the JVM expression form at numpy speed). Fine: an equi-join on
+    coarse_id against the k_coarse-row fine frame, then one argmax over
+    the joined cell's array. The fine join is pinned to a SHUFFLE join
+    (``merge`` hint; VERDICT r5 #2, r6 #2): each fine row is k_fine × dim
     doubles, so the full frame is k_coarse × k_fine × dim — the ENTIRE
     centroid set (~8 GB at the production heuristic n_cells ≈ √10¹²,
-    dim 1024). The planner broadcasts it while its byte ESTIMATE is
-    small and falls back to a shuffle join on coarse_id once it is not,
-    which ships each fine row only to the tasks holding that cell —
-    per-executor residency O(k_fine × dim × cells-per-task). Cost per
-    vector is (k_coarse + k_fine) · dim — the hierarchical win over the
-    flat quantizer's n_cells · dim — and plan size is independent of
-    k_fine. Rows whose coarse cell got no sample rows (no fine row —
-    possible only when the cell is empty of sample but not of corpus)
-    keep fine_id 0 via the left join's coalesce."""
+    dim 1024) — and without the hint the planner, or AQE at runtime,
+    broadcasts it whenever its size looks small. The shuffle ships each
+    fine row only to the tasks holding that cell — per-executor residency
+    O(k_fine × dim × cells-per-task). Cost per vector is
+    (k_coarse + k_fine) · dim — the hierarchical win over the flat
+    quantizer's n_cells · dim — and plan size is independent of k_fine.
+    Rows whose coarse cell got no sample rows (no fine row — possible
+    only when the cell is empty of sample but not of corpus) keep
+    fine_id 0 via the left join's coalesce."""
     c = _assign_arrow(
         _spread(df.select(id_col, vec_col)),
         index.coarse,
@@ -1226,7 +1217,7 @@ def assign_two_level(
         F.col(vec_col).alias("cv"),
         "coarse_id",
     )
-    j = c.join(index.fine, "coarse_id", "left")
+    j = c.join(index.fine.hint("merge"), "coarse_id", "left")
     return j.select(
         "vec_id",
         "cv",
@@ -1253,64 +1244,25 @@ def ivf_topk_two_level(
 ) -> DataFrame:
     """Top-k ANN over the two-level inverted file.
 
-    Each query ranks coarse cells on the broadcast matrix, keeps
-    ``n_probe_coarse``, joins those cells' fine rows, ranks the
-    n_probe_coarse × k_fine candidate fine cells by fine-centroid dot,
-    keeps ``n_probe_fine`` (coarse_id, fine_id) pairs, and exact-cosine
-    re-ranks only the corpus rows in those cells. Identical vectors
-    assign and probe identically, so exact-duplicate queries have
-    recall 1 by construction (the deterministic-oracle hook, as with
-    ``ivf_topk``). Scan fraction ~ n_probe_fine / (k_coarse · k_fine)."""
+    Each query ranks coarse cells on the driver-resident matrix, keeps
+    ``n_probe_coarse``, ranks the fine centroids of those cells only
+    (fetched from the fine frame by ``_probe``), keeps ``n_probe_fine``
+    (coarse_id, fine_id) pairs, and exact-cosine re-ranks only the
+    corpus rows in those cells. Identical vectors assign and probe
+    identically, so exact-duplicate queries have recall 1 by
+    construction (the deterministic-oracle hook, as with ``ivf_topk``).
+    Scan fraction ~ n_probe_fine / (k_coarse · k_fine)."""
     idx = index if index is not None else train_ivf_two_level(
         corpus, k_coarse, k_fine, id_col, vec_col, iters, sample_cap
     )
-    # corpus norms once per row at assignment time; query norms once
-    # before the probe windows (cos = dot/(qn*cn), values unchanged)
-    inv = assign_two_level(corpus, idx, id_col, vec_col).withColumn(
-        "_cn", _norm(F.col("cv"))
-    )
-
-    qc = _with_dots(queries, idx.coarse, vec_col, "_dots").select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-        F.posexplode("_dots").alias("coarse_id", "_cdot"),
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("_cdot").desc(), F.col("coarse_id").asc()
-    )
-    qprobe = (
-        qc.withColumn("_cr", F.row_number().over(wc))
-        .filter(F.col("_cr") <= n_probe_coarse)
-        .drop("_cr", "_cdot")
-    )
-    qfine = qprobe.join(F.broadcast(idx.fine), "coarse_id").select(
-        "query_id",
-        "qv",
-        "_qn",
-        "coarse_id",
-        F.posexplode(_dots_from_matrix("qv", "fines")).alias("fine_id", "_fdot"),
-    )
-    wf = Window.partitionBy("query_id").orderBy(
-        F.col("_fdot").desc(), F.col("coarse_id").asc(), F.col("fine_id").asc()
-    )
-    probe_rows = (
-        qfine.withColumn("_fr", F.row_number().over(wf))
-        .filter(F.col("_fr") <= n_probe_fine)
-        .select("query_id", "qv", "_qn", "coarse_id", "fine_id")
-        .collect()  # |Q| x n_probe_fine rows — the broadcast query side
-    )
-
-    scored = _probe_rerank_arrow(
-        inv, probe_rows, ["coarse_id", "fine_id"]
-    ).filter(F.col("vec_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
+    return _rerank_topk(
+        assign_two_level(corpus, idx, id_col, vec_col),
+        _probe(
+            queries, id_col, vec_col, idx.coarse, n_probe_coarse, idx.fine,
+            n_probe_fine,
+        ),
+        k,
+        ("coarse_id", "fine_id"),
     )
 
 
@@ -1325,7 +1277,7 @@ def write_ivf_index_two_level(
     (coarse_id, fine_id) — ``.../coarse_id=<i>/fine_id=<j>/``. Probing
     n_probe_fine of k_coarse × k_fine cells then reads only those
     directories (manifest-level pruning on Iceberg). Assignment is the
-    broadcast-coarse + fine-join projection computed pre-shuffle at full
+    ``assign_two_level`` projection computed pre-shuffle at full
     width; the repartition on the partition keys clusters each cell into
     one writer so the layout is one file per cell, not writers × cells
     small files (guide §6)."""
@@ -1351,62 +1303,17 @@ def ivf_topk_two_level_indexed(
     partition pruning on BOTH levels.
 
     The probed (coarse_id, fine_id) pairs across all queries number at
-    most min(|Q| × n_probe_fine, k_coarse × k_fine) — tiny — so they are
-    collected and pushed as an exact disjunction of per-pair conjunctions:
-    the scan's PartitionFilters skip every unprobed directory at
-    file-listing time. Mirrors ``ivf_topk_indexed``'s design with the
-    flat quantizer replaced by the residency-bounded two-level one."""
-    qc = _with_dots(queries, index.coarse, vec_col, "_dots").select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-        F.posexplode("_dots").alias("coarse_id", "_cdot"),
+    most min(|Q| × n_probe_fine, k_coarse × k_fine) — tiny — so they
+    become an exact disjunction of per-pair conjunctions on the index
+    scan (``_index_source``): the scan's PartitionFilters skip every
+    unprobed directory at file-listing time. Mirrors
+    ``ivf_topk_indexed``'s design with the flat quantizer replaced by
+    the residency-bounded two-level one."""
+    probes = _probe(
+        queries, id_col, vec_col, index.coarse, n_probe_coarse, index.fine,
+        n_probe_fine,
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("_cdot").desc(), F.col("coarse_id").asc()
-    )
-    qprobe = (
-        qc.withColumn("_cr", F.row_number().over(wc))
-        .filter(F.col("_cr") <= n_probe_coarse)
-        .drop("_cr", "_cdot")
-    )
-    qfine = qprobe.join(F.broadcast(index.fine), "coarse_id").select(
-        "query_id",
-        "qv",
-        "_qn",
-        "coarse_id",
-        F.posexplode(_dots_from_matrix("qv", "fines")).alias("fine_id", "_fdot"),
-    )
-    wf = Window.partitionBy("query_id").orderBy(
-        F.col("_fdot").desc(), F.col("coarse_id").asc(), F.col("fine_id").asc()
-    )
-    # one collect replaces the r5 eager checkpoint + pairs collect: the
-    # probe set feeds both the static two-level partition filter and the
-    # re-rank kernel's closure
-    probe_rows = (
-        qfine.withColumn("_fr", F.row_number().over(wf))
-        .filter(F.col("_fr") <= n_probe_fine)
-        .select("query_id", "qv", "_qn", "coarse_id", "fine_id")
-        .collect()
-    )
-    pairs = {(r["coarse_id"], r["fine_id"]) for r in probe_rows}
-    pred = None
-    for ci, fi in sorted(pairs):
-        p = (F.col("coarse_id") == ci) & (F.col("fine_id") == fi)
-        pred = p if pred is None else (pred | p)
-    inv = _spread(
-        spark.read.parquet(index_path).filter(
-            pred if pred is not None else F.lit(False)
-        )
-    ).withColumn("_cn", _norm(F.col("cv")))
-    scored = _probe_rerank_arrow(
-        inv, probe_rows, ["coarse_id", "fine_id"]
-    ).filter(F.col("vec_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
+    key_cols = ("coarse_id", "fine_id")
+    return _rerank_topk(
+        _index_source(spark, index_path, key_cols, probes), probes, k, key_cols
     )

@@ -13,10 +13,37 @@ from neontology_spark.dedup import (
     simhash_pairs,
 )
 from neontology_spark.similarity import (
+    _checked_vec,
+    _plane_matrix,
     brute_force_topk,
     embedding_near_duplicates,
     lsh_topk,
 )
+
+
+def hyperplane_signature(vec_col: str, num_planes: int, dim: int):
+    """Literal-plane reference for ``with_hyperplane_signature``:
+    array<int> of num_planes sign bits sign(v · plane_p), each plane an
+    inline literal weight array — num_planes × dim literal plan nodes,
+    the blowup the broadcast-matrix form removes (VERDICT r3 #1). NULL
+    vectors yield a NULL signature; other rows fail fast on a length
+    != dim (ADVICE r2/r3), exactly like the library form."""
+    planes = _plane_matrix(num_planes, dim)
+
+    def bit(p: int):
+        w = F.array(*[F.lit(x) for x in planes[p]])
+        proj = F.aggregate(
+            F.zip_with(_checked_vec(vec_col, dim), w, lambda x, wi: x * wi),
+            F.lit(0.0),
+            lambda acc, t: acc + t,
+        )
+        return F.when(proj >= 0, 1).otherwise(0)
+
+    return F.when(
+        F.col(vec_col).isNotNull(),
+        F.array(*[bit(p) for p in range(num_planes)]),
+    )
+
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the sun sets "
@@ -197,17 +224,17 @@ def test_ivf_sampled_training_recall_on_planted_exact(spark, vectors):
 def test_hyperplane_signature_wrong_dim_fails_fast(spark, vectors):
     """ADVICE r2: a dim smaller than the real vector length must raise,
     not silently collapse every row into one LSH bucket."""
-    from neontology_spark.similarity import _infer_dim, hyperplane_signature
+    from neontology_spark.similarity import _infer_dim, with_hyperplane_signature
 
     real_dim = _infer_dim(vectors, "embedding")
-    bad = vectors.select(
-        hyperplane_signature("embedding", 8, real_dim // 2).alias("sig")
-    )
+    bad = with_hyperplane_signature(
+        vectors, num_planes=8, dim=real_dim // 2
+    ).select("sig")
     with pytest.raises(Exception, match="hyperplane_signature"):
         bad.collect()
-    good = vectors.select(
-        hyperplane_signature("embedding", 8, real_dim).alias("sig")
-    )
+    good = with_hyperplane_signature(
+        vectors, num_planes=8, dim=real_dim
+    ).select("sig")
     assert len(good.first()["sig"]) == 8
 
 
@@ -235,14 +262,54 @@ def test_null_embedding_yields_null_signature_not_error(spark):
     assert [(p["id_a"], p["id_b"]) for p in pairs] == [(1, 2)]
 
 
+@pytest.mark.parametrize(
+    "path", ["brute_force", "flat", "flat_indexed", "two_level", "two_level_indexed"]
+)
+def test_null_vectors_one_rule_on_every_topk(spark, tmp_path, path):
+    """The LSH rule (ADVICE r3) holds on every top-k path: a NULL query
+    vector gives no output rows and a NULL corpus vector is never a
+    candidate. Adding one NULL row to each side changes nothing and
+    raises nothing."""
+    from neontology_spark import similarity as S
+
+    schema = "vec_id long, embedding array<double>"
+    rows = [
+        (i, [float((i * 7 + j) % 5) + (2.0 if j == i % 4 else 0.0) for j in range(4)])
+        for i in range(40)
+    ]
+    corpus = spark.createDataFrame(rows, schema)
+    queries = spark.createDataFrame(
+        rows[:3] + [(1000 + i, v) for i, v in rows[:3]], schema
+    )
+    null_corpus = corpus.unionByName(spark.createDataFrame([(500, None)], schema))
+    null_queries = queries.unionByName(spark.createDataFrame([(1500, None)], schema))
+    cents = S.train_ivf_centroids(corpus, n_centroids=4, iters=1)
+    idx = S.train_ivf_two_level(corpus, k_coarse=2, k_fine=2, iters=1)
+    kw2 = dict(k=3, n_probe_coarse=1, n_probe_fine=2)
+
+    def run(c, q, tag):
+        if path == "brute_force":
+            return S.brute_force_topk(c, q, k=3)
+        if path == "flat":
+            return S.ivf_topk(c, q, k=3, n_probe=2, centroids=cents)
+        if path == "two_level":
+            return S.ivf_topk_two_level(c, q, index=idx, **kw2)
+        where = str(tmp_path / tag)
+        if path == "flat_indexed":
+            S.write_ivf_index(c, where, cents)
+            return S.ivf_topk_indexed(spark, where, q, cents, k=3, n_probe=2)
+        S.write_ivf_index_two_level(c, where, idx)
+        return S.ivf_topk_two_level_indexed(spark, where, q, idx, **kw2)
+
+    clean = sorted(map(tuple, run(corpus, queries, "clean").collect()))
+    with_nulls = sorted(map(tuple, run(null_corpus, null_queries, "nulls").collect()))
+    assert with_nulls == clean and len(clean) > 0
+
+
 def test_broadcast_signature_matches_literal_form(spark, vectors):
     """The broadcast-matrix signature must be bit-identical to the
     literal-plane inline form (same planes, same arithmetic order)."""
-    from neontology_spark.similarity import (
-        _infer_dim,
-        hyperplane_signature,
-        with_hyperplane_signature,
-    )
+    from neontology_spark.similarity import _infer_dim, with_hyperplane_signature
 
     dim = _infer_dim(vectors, "embedding")
     lit = {
@@ -268,7 +335,6 @@ def test_plan_stays_bounded_at_production_dim(spark):
     at dim=1024 to prove the broadcast path executes."""
     from neontology_spark.similarity import (
         _signature_from_matrix,
-        hyperplane_signature,
         with_hyperplane_signature,
     )
 
