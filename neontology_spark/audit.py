@@ -15,6 +15,12 @@ Storage: parquet directories (append mode) under one audit root —
 append snapshots); parquet-append is the sandbox stand-in behind the same
 writer API (SURVEY.md §7 risk register: thin IO seam, same logic).
 
+Each check is computed once per run: ``ValidationRun`` persists the
+tagged violation rows, writes them, and derives every verdict on the
+driver from one per-(check, part) count over those rows plus one
+per-part row count over the table — no check plan is re-executed for
+the verdicts or for the caller's collect.
+
 Crash consistency: verdicts/violations/metrics are written BEFORE the
 lineage marker for their partitions; "completed" is defined solely by
 lineage rows, so a crash mid-write re-processes the partition (idempotent
@@ -23,6 +29,7 @@ lineage rows, so a crash mid-write re-processes the partition (idempotent
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 import uuid
@@ -42,6 +49,10 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("completed_at", T.DoubleType(), False),
     ]
 )
+
+# violation-row tag inside ValidationRun: the check's position in
+# checks + global_checks
+_POS = "_check_pos"
 
 
 class AuditStore:
@@ -122,9 +133,16 @@ class ValidationRun:
 
     ``run(resume=True)`` computes pending = all partitions − completed
     lineage, filters the table to pending partitions (an IN-list predicate
-    that prunes Iceberg/parquet partitions at the scan), executes the checks
-    as above, appends verdicts + violations + metrics, then marks lineage.
-    Returns the pending-part verdict rows.
+    that prunes Iceberg/parquet partitions at the scan) and executes the
+    checks as above. Every check is computed exactly once: their violation
+    rows, tagged with the check's position, are persisted (they are
+    KB-sized by design), appended to the violations stream and counted per
+    (check, part) in one small collect. ``checks.base.verdict_rows`` turns
+    those counts plus one ``groupBy(part).count()`` over the table (which
+    also yields the partition list) into the verdict rows on the driver.
+    Then metrics are appended and lineage is marked last. Returns the
+    pending-part verdict rows as a local DataFrame, so collecting it
+    re-runs nothing.
     """
 
     spark: SparkSession
@@ -137,15 +155,14 @@ class ValidationRun:
     metrics_fn: Optional[Callable[[DataFrame], DataFrame]] = None
     global_checks: Sequence[Callable[[DataFrame], "object"]] = ()
 
+    def _part_counts(self) -> dict[int, int]:
+        """{part: n_rows} over the whole table — one aggregate over the
+        partition column, collected."""
+        part = F.col(self.part_col).cast("long").alias("part")
+        return {r["part"]: r["count"] for r in self.table.groupBy(part).count().collect()}
+
     def all_parts(self) -> set[int]:
-        return {
-            r["p"]
-            for r in self.table.select(
-                F.col(self.part_col).cast("long").alias("p")
-            )
-            .distinct()
-            .collect()
-        }
+        return set(self._part_counts())
 
     def pending_parts(self, resume: bool = True) -> set[int]:
         parts = self.all_parts()
@@ -154,83 +171,89 @@ class ValidationRun:
         return parts - self.store.completed_parts(self.run_id, self.label)
 
     def run(self, resume: bool = True) -> DataFrame:
-        from .checks.base import CheckResult, partition_row_counts
+        from .checks.base import VERDICT_SCHEMA, verdict_rows
 
-        all_parts = self.all_parts()
+        part_counts = self._part_counts()
         completed = (
             self.store.completed_parts(self.run_id, self.label) if resume else set()
         )
-        pending = sorted(all_parts - completed)
-        has_completed = bool(all_parts & completed)
+        n_rows = {p: n for p, n in sorted(part_counts.items()) if p not in completed}
+        pending = list(n_rows)
+        has_completed = len(n_rows) < len(part_counts)
         if not pending:
-            from .checks.base import VERDICT_SCHEMA
-
             return self.spark.createDataFrame([], VERDICT_SCHEMA)
 
         # partition pruning: IN-list on the partition column reaches the scan
-        scoped = self.table.filter(F.col(self.part_col).isin([int(p) for p in pending]))
-        counts = partition_row_counts(scoped, self.part_col)
+        scoped = self.table.filter(F.col(self.part_col).isin(pending))
+        results = [check(scoped) for check in self.checks]
+        n_local = len(results)
+        # global checks scan the whole table (cross-partition violations
+        # must not be missed on resume); their output is restricted to
+        # pending partitions below
+        results += [check(self.table) for check in self.global_checks]
 
-        verdicts = None
-        violations = None
-
-        def accumulate(res) -> None:
-            nonlocal verdicts, violations
-            v = res.verdicts(counts)
-            verdicts = v if verdicts is None else verdicts.unionByName(v)
-            violations = (
-                res.violations
-                if violations is None
-                else violations.unionByName(res.violations)
-            )
-
-        for check in self.checks:
-            accumulate(check(scoped))
-        for check in self.global_checks:
-            # whole-table scan (cross-partition violations must not be
-            # missed on resume); output restricted to pending partitions —
-            # part=NULL (global-sentinel) violations are always kept.
-            res = check(self.table)
-            pending_pred = F.col("part").isNull() | F.col("part").isin(
-                [int(p) for p in pending]
-            )
-            pending_v = res.violations.filter(pending_pred)
-            if has_completed:
-                # cross-partition groups (ADVICE r2): a completed-side
-                # member of a violation group whose pending-side member the
-                # scan just found would otherwise be silently dropped — the
-                # earlier run could not have recorded it (the pending data
-                # did not exist yet). Re-emit those members, tagged, so dup
-                # groups are complete without re-emitting every completed-
-                # part violation. Keyed on (check, key) — the group
-                # identity every cross-partition check (uniqueness) uses.
-                pend_keys = (
-                    pending_v.filter(F.col("key").isNotNull())
-                    .select("check", "key")
-                    .dropDuplicates()
-                )
-                late = (
-                    res.violations.filter(~pending_pred)
-                    .join(F.broadcast(pend_keys), ["check", "key"], "left_semi")
-                    .withColumn(
-                        "detail",
-                        F.concat(
-                            F.coalesce(F.col("detail"), F.lit("")),
-                            F.lit(" [late: cross-partition member from completed part]"),
-                        ),
-                    )
-                )
-                pending_v = pending_v.unionByName(late.select(*pending_v.columns))
-            accumulate(CheckResult(res.check, res.label, pending_v))
-
+        tagged = functools.reduce(
+            DataFrame.unionByName,
+            (r.violations.withColumn(_POS, F.lit(i)) for i, r in enumerate(results)),
+        ).persist()
         run_tag = F.lit(self.run_id).alias("run_id")
-        self.store.append("violations", violations.select(run_tag, "*"))
+        try:
+            violations = self._pending_violations(tagged, n_local, pending, has_completed)
+            self.store.append("violations", violations.drop(_POS).select(run_tag, "*"))
+            # keyed by check position, so two checks sharing a name stay apart
+            n_violations = [{} for _ in results]
+            for r in violations.groupBy(_POS, "part").count().collect():
+                n_violations[r[_POS]][r["part"]] = r["count"]
+        finally:
+            tagged.unpersist()
+
+        rows = [
+            row
+            for res, n_vio in zip(results, n_violations)
+            for row in verdict_rows(res.check, res.label, n_rows, n_vio)
+        ]
+        verdicts = self.spark.createDataFrame(rows, VERDICT_SCHEMA)
         self.store.append("verdicts", verdicts.select(run_tag, "*"))
         if self.metrics_fn is not None:
             self.store.append("metrics", self.metrics_fn(scoped).select(run_tag, "*"))
         # lineage LAST: a crash before this line re-runs the partitions
         self.store.mark_completed(self.run_id, self.label, pending)
         return verdicts
+
+    @staticmethod
+    def _pending_violations(
+        tagged: DataFrame, n_local: int, pending: list[int], has_completed: bool
+    ) -> DataFrame:
+        """The rows to record: every partition-local violation, and the
+        global checks' rows in pending partitions — part=NULL (the
+        global sentinel) is always kept."""
+        is_global = F.col(_POS) >= n_local
+        pending_pred = F.col("part").isNull() | F.col("part").isin(pending)
+        kept = tagged.filter(~is_global | pending_pred)
+        if not has_completed:
+            return kept
+        # cross-partition groups: a completed-side member of a
+        # violation group whose pending-side member the scan just found
+        # would otherwise be silently dropped — the earlier run could not
+        # have recorded it (the pending data did not exist yet). Re-emit
+        # those members, tagged, so dup groups are complete without
+        # re-emitting every completed-part violation. Keyed on (check, key)
+        # within one check — the group identity every cross-partition
+        # check (uniqueness) uses.
+        keys = [_POS, "check", "key"]
+        pend_keys = kept.filter(is_global & F.col("key").isNotNull()).select(*keys).dropDuplicates()
+        late = (
+            tagged.filter(is_global & ~pending_pred)
+            .join(F.broadcast(pend_keys), keys, "left_semi")
+            .withColumn(
+                "detail",
+                F.concat(
+                    F.coalesce(F.col("detail"), F.lit("")),
+                    F.lit(" [late: cross-partition member from completed part]"),
+                ),
+            )
+        )
+        return kept.unionByName(late.select(*kept.columns))
 
 
 # ---------------------------------------------------------------------------

@@ -88,6 +88,16 @@ def spread_to_parallelism(df: DataFrame, min_bytes: int = 8 << 20) -> DataFrame:
     no-op; the repartition fires exactly when the shuffle it adds is
     negligible.
 
+    A scan over at least defaultParallelism files is left alone: Spark
+    charges each file ``spark.sql.files.openCostInBytes``, so its split
+    size (``FilePartition.maxSplitBytes``) is then at most
+    total / defaultParallelism and the files spread over at least that
+    many splits. The file count stands in for the two figures that
+    mislead here: the size estimate (a cross join inflates it — the
+    ``dedup_exact`` union over one file estimates ~76 MB at sf0.1) and
+    the planned split count (a file with one parquet row group is cut
+    into several splits, all but one empty).
+
     ``min_bytes``: inputs ESTIMATED below this (logical-plan stats — a
     driver-side constant-time probe) are left alone — for cheap per-row
     work the shuffle costs more than it saves (measured r6: +0.4 s on
@@ -106,7 +116,7 @@ def spread_to_parallelism(df: DataFrame, min_bytes: int = 8 << 20) -> DataFrame:
     except Exception:
         est = None
     if est is not None and est < (1 << 60):  # known, non-sentinel stats
-        if min_bytes <= est < _SPREAD_CAP_BYTES:
+        if min_bytes <= est < _SPREAD_CAP_BYTES and len(df.inputFiles()) < n:
             return df.repartition(n)
         return df
     if df.rdd.getNumPartitions() < n:

@@ -11,8 +11,15 @@ Scale design:
 * Violation rows carry only (partition, key, column, detail) — never wide
   payload columns like image ``bytes`` — so a check over a 100 TB table
   emits KBs, not TBs, and the scan can column-prune to the checked columns.
-* Verdicts are a ``groupBy(part)`` over the (tiny) violation set joined
-  against per-partition row counts — one extra aggregate over the scan.
+* Verdicts are per-partition violation counts over the (tiny) violation
+  set matched against per-partition row counts: one row per (check,
+  part), ``passed`` iff the part has no violations. The match is
+  null-safe (part=NULL is the global sentinel), and a part that has
+  violations but no row count still gets a row, with n_rows=NULL and
+  passed=False. ``verdict_rows`` applies this to counts already on the
+  driver (``ValidationRun``: one count over the violations it wrote,
+  one part-count scan of the table); ``CheckResult.verdicts`` is the
+  same rule as a lazy join, for callers that keep the plan.
 * All checks are pure DataFrame expressions: Catalyst pushes the involved
   column reads into the scan, and AQE handles stragglers.
 """
@@ -99,15 +106,14 @@ class CheckResult:
     violations: DataFrame
 
     def verdicts(self, row_counts: DataFrame) -> DataFrame:
-        """Per-partition pass/fail. ``row_counts`` = (part, n_rows) computed
-        once per table and shared across checks (one scan, many verdicts).
+        """Per-partition pass/fail (the module's verdict rule) as a lazy
+        plan. ``row_counts`` = (part, n_rows) computed once per table and
+        shared across checks (one scan, many verdicts).
 
-        The join is NULL-safe AND full-outer on ``part``: global checks use
-        part=NULL (the documented sentinel), and a plain left equi-join would
-        silently drop their violation counts — a false "passed" verdict from
-        a validation engine. Full-outer also surfaces violations attributed
-        to a part with no row-count row (n_rows=NULL, passed=False) instead
-        of hiding them.
+        The join is NULL-safe AND full-outer on ``part``: a plain left
+        equi-join would silently drop the part=NULL counts — a false
+        "passed" verdict from a validation engine — and hide violations
+        attributed to a part with no row-count row.
         """
         vio = (
             self.violations.groupBy("part")
@@ -126,6 +132,21 @@ class CheckResult:
                 (F.coalesce(F.col("n_violations"), F.lit(0)) == 0).alias("passed"),
             )
         )
+
+
+def verdict_rows(
+    check: str, label: str, n_rows: dict, n_violations: dict
+) -> list[tuple]:
+    """The module's verdict rule over counts already on the driver:
+    ``n_rows`` = {part: rows} for the parts under validation,
+    ``n_violations`` = {part: violations} for this check (part None = the
+    global sentinel). Returns VERDICT_SCHEMA tuples — every part of
+    ``n_rows``, then each part with violations but no row count."""
+    rows = []
+    for p in list(n_rows) + [p for p in n_violations if p not in n_rows]:
+        n = n_violations.get(p, 0)
+        rows.append((p, check, label, n_rows.get(p), n, n == 0))
+    return rows
 
 
 def partition_row_counts(df: DataFrame, part_col: Optional[str]) -> DataFrame:

@@ -374,54 +374,47 @@ def phash_consistency(
     ones (quantization flips a bit only where adjacent block means
     nearly tie)."""
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            # NULL stored phash is exactly the dirty input a consistency
-            # checker must FLAG, not crash on (ADVICE r5: the direct
-            # int64 conversion raised on the first NULL and aborted the
-            # job): track the mask, convert through a 0 sentinel, and
-            # surface those rows with NULL stored/hamming — the
-            # violation filter treats them as inconsistent.
-            stored_raw = pdf[phash_col]
-            null_mask = stored_raw.isna().to_numpy()
-            stored = (
-                pd.to_numeric(stored_raw, errors="coerce")
-                .fillna(0)
-                .astype(np.int64)
-                .to_numpy()
-            )
-            out = {
-                "image_id": pdf[id_col].astype(str),
-                "decode_ok": np.zeros(n, dtype=bool),
-                "stored_phash": stored,
-                "recomputed_phash": np.zeros(n, dtype=np.int64),
-                "hamming": np.full(n, -1, dtype=np.int32),
-            }
+    def kernel(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for batch in batches:
+            n = batch.num_rows
+            # the stored hash is read through Arrow, never pandas: a
+            # nullable int64 column becomes float64 in pandas, which rounds
+            # every hash above 2**53 in a batch holding a NULL. A NULL
+            # stored phash is exactly the dirty input a consistency checker
+            # must FLAG, not crash on: such rows surface with
+            # NULL stored/hamming — the violation filter treats them as
+            # inconsistent.
+            stored_arr = batch.column(phash_col).cast(pa.int64())
+            null_mask = stored_arr.is_null().to_numpy(zero_copy_only=False)
+            stored = stored_arr.fill_null(0).to_numpy(zero_copy_only=False).view(np.uint64)
+            blobs = batch.column(bytes_col).to_pylist()
+            decode_ok = np.zeros(n, dtype=bool)
+            recomputed = np.zeros(n, dtype=np.uint64)
+            hamming = np.zeros(n, dtype=np.int32)
             for k in range(n):
-                px = _decode(pdf[bytes_col].iloc[k])
-                if px is None:
-                    continue
-                u = dhash64(px)
+                px = _decode(blobs[k])
+                u = dhash64(px) if px is not None else None
                 if u is None:
                     continue
-                out["decode_ok"][k] = True
-                out["recomputed_phash"][k] = np.uint64(u).astype(np.int64)
-                if null_mask[k]:
-                    continue  # no stored hash to compare against
-                stored_u = np.int64(out["stored_phash"][k]).astype(np.uint64)
-                x = int(stored_u ^ np.uint64(u))
-                out["hamming"][k] = bin(x).count("1")
-            res = pd.DataFrame(out)
-            # -1 is the in-kernel NULL marker; surface as real NULLs
-            res["hamming"] = res["hamming"].astype("Int32")
-            res.loc[~res["decode_ok"], "hamming"] = pd.NA
-            res["stored_phash"] = res["stored_phash"].astype("Int64")
-            res.loc[null_mask, "stored_phash"] = pd.NA
-            res.loc[null_mask, "hamming"] = pd.NA
-            yield res
+                decode_ok[k] = True
+                recomputed[k] = u
+                hamming[k] = bin(int(stored[k]) ^ u).count("1")
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pc.cast(batch.column(id_col), pa.string()),
+                    pa.array(decode_ok),
+                    pa.array(stored.view(np.int64), mask=null_mask),
+                    pa.array(recomputed.view(np.int64)),
+                    # NULL where there is nothing to compare
+                    pa.array(hamming, mask=~decode_ok | null_mask),
+                ],
+                names=["image_id", "decode_ok", "stored_phash", "recomputed_phash", "hamming"],
+            )
 
-    return df.select(id_col, bytes_col, phash_col).mapInPandas(
+    return df.select(id_col, bytes_col, phash_col).mapInArrow(
         kernel, schema=PHASH_CONSISTENCY_DDL
     )
 

@@ -2,12 +2,14 @@
 the pending partitions; completed partitions are never re-processed."""
 
 import functools
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from neontology_spark.audit import AuditStore, ValidationRun
 from neontology_spark.checks import check_required, check_unique, column_stats
+from neontology_spark.checks.base import CheckResult, partition_row_counts, shape_violations
 from neontology_spark.images import NULL_FMT_ROWS, generate_images, image_model
 
 N = 2_000
@@ -101,6 +103,188 @@ def test_partition_pruning_reaches_scan(spark, tmp_path, setup):
     pruned = stored.filter(F.col("part").isin([5, 6, 7]))
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "part" in plan
+
+# ---------------------------------------------------------------------------
+# compute-once: each check's violations are computed exactly once per run,
+# and the verdicts ValidationRun builds from them equal CheckResult.verdicts
+# ---------------------------------------------------------------------------
+
+T_ROWS = 240
+T_PARTS = 8  # contiguous: part = id // 30, one Spark partition per part
+T_DONE = [0, 1, 2, 3]  # completed before a resume
+
+
+def _table(spark):
+    return spark.range(0, T_ROWS, 1, T_PARTS).select(
+        "id",
+        F.floor(F.col("id") / (T_ROWS // T_PARTS)).alias("part"),
+        F.concat(F.lit("k"), (F.col("id") % 80).cast("string")).alias("key"),
+    )
+
+
+def _check(name, pred, acc=None, fail=False):
+    """Check flagging rows where ``pred`` holds; the rows pass through a
+    mapInArrow that counts them into ``acc`` (or raises when ``fail``)."""
+
+    def kernel(batches):
+        for b in batches:
+            if fail:
+                raise ValueError("check failed mid-run")
+            if acc is not None:
+                acc.add(b.num_rows)
+            yield b
+
+    def check(df):
+        scanned = df.mapInArrow(kernel, schema=df.schema)
+        flagged = scanned.filter(pred)
+        return CheckResult(
+            name, "T", shape_violations(flagged, name, "T", "part", key=F.col("key"))
+        )
+
+    return check
+
+
+def _global_sentinel(df):
+    """A table-level check: one part=NULL violation row."""
+    row = df.agg(F.count(F.lit(1)).alias("n")).filter(F.col("n") > 0)
+    return CheckResult(
+        "table_level", "T", shape_violations(row, "table_level", "T", detail="non-empty")
+    )
+
+
+def _reference(run, resume):
+    """The lazy per-check form the verdicts must equal: CheckResult.verdicts
+    over the pruned scan's row counts, each global result restricted to the
+    pending parts plus its tagged late completed-side members."""
+    parts = run.all_parts()
+    completed = run.store.completed_parts(run.run_id, run.label) if resume else set()
+    pending = sorted(parts - completed)
+    scoped = run.table.filter(F.col(run.part_col).isin(pending))
+    results = [check(scoped) for check in run.checks]
+    for check in run.global_checks:
+        res = check(run.table)
+        pred = F.col("part").isNull() | F.col("part").isin(pending)
+        v = res.violations.filter(pred)
+        if parts & completed:
+            keys = v.filter(F.col("key").isNotNull()).select("check", "key").dropDuplicates()
+            late = (
+                res.violations.filter(~pred)
+                .join(keys, ["check", "key"], "left_semi")
+                .withColumn(
+                    "detail",
+                    F.concat(
+                        F.coalesce(F.col("detail"), F.lit("")),
+                        F.lit(" [late: cross-partition member from completed part]"),
+                    ),
+                )
+            )
+            v = v.unionByName(late.select(*v.columns))
+        results.append(CheckResult(res.check, res.label, v))
+    counts = partition_row_counts(scoped, run.part_col)
+    verdicts = functools.reduce(
+        lambda a, b: a.unionByName(b), [r.verdicts(counts) for r in results]
+    )
+    violations = functools.reduce(
+        lambda a, b: a.unionByName(b), [r.violations for r in results]
+    )
+    return Counter(map(tuple, verdicts.collect())), Counter(map(tuple, violations.collect()))
+
+
+@pytest.mark.parametrize("resume", [False, True])
+def test_each_check_computed_once(spark, tmp_path, resume):
+    """After run() and a collect of the returned verdicts, a partition-local
+    check has scanned the pending rows once and a global check the whole
+    table once — no re-execution for the verdicts or the collect."""
+    sc = spark.sparkContext
+    local_acc, global_acc = sc.accumulator(0), sc.accumulator(0)
+    store = AuditStore(spark, str(tmp_path / "audit"))
+    run = ValidationRun(
+        spark=spark,
+        table=_table(spark),
+        label="T",
+        part_col="part",
+        checks=[_check("local", F.col("id") % 9 == 0, local_acc)],
+        global_checks=[_check("global", F.col("id") % 80 == 5, global_acc)],
+        store=store,
+        run_id="once",
+    )
+    if resume:
+        store.mark_completed("once", "T", T_DONE)
+    rows = run.run(resume=resume).collect()
+    n_pending = T_ROWS // T_PARTS * (T_PARTS - len(T_DONE)) if resume else T_ROWS
+    assert local_acc.value == n_pending
+    assert global_acc.value == T_ROWS
+    # the resume re-emits the late completed-side members of key k5
+    late = [r for r in rows if r["n_rows"] is None]
+    assert bool(late) == resume
+    assert all(r["part"] in T_DONE and not r["passed"] for r in late)
+
+
+def test_failing_check_leaves_no_lineage_and_no_cache(spark, tmp_path):
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    store = AuditStore(spark, str(tmp_path / "audit"))
+    run = ValidationRun(
+        spark=spark,
+        table=_table(spark),
+        label="T",
+        part_col="part",
+        checks=[_check("ok", F.col("id") % 9 == 0), _check("boom", F.lit(True), fail=True)],
+        global_checks=[_global_sentinel],
+        store=store,
+        run_id="crash",
+    )
+    with pytest.raises(Exception, match="check failed mid-run"):
+        run.run()
+    assert store.read("lineage") is None
+    assert store.completed_parts("crash", "T") == set()
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) - before == set()
+
+
+@pytest.mark.parametrize("resume", [False, True])
+def test_verdicts_match_check_result_verdicts(spark, tmp_path, resume):
+    """Edge cases: a check with zero violations, a global part=NULL row, a
+    late member in a completed part (resume), two checks sharing a name,
+    and pending parts whose Spark partitions are empty after pruning
+    (resume) or where nothing violates (part 5 for the local checks)."""
+    store = AuditStore(spark, str(tmp_path / "audit"))
+    run = ValidationRun(
+        spark=spark,
+        table=_table(spark),
+        label="T",
+        part_col="part",
+        checks=[
+            _check("zero", F.lit(False)),
+            _check("same_name", F.col("id").isin(3, 64, 125)),
+            _check("same_name", F.col("id") % 45 == 1),
+        ],
+        global_checks=[
+            _check("dup_key", (F.col("id") % 80 == 5) | (F.col("id") % 80 == 50)),
+            _global_sentinel,
+        ],
+        store=store,
+        run_id="parity",
+    )
+    if resume:
+        store.mark_completed("parity", "T", T_DONE)
+    want_verdicts, want_violations = _reference(run, resume)
+    got = run.run(resume=resume).collect()
+    assert Counter(map(tuple, got)) == want_verdicts
+    stored = store.read("verdicts").drop("run_id").collect()
+    assert Counter(map(tuple, stored)) == want_verdicts
+    written = store.read("violations").drop("run_id").collect()
+    assert Counter(map(tuple, written)) == want_violations
+    # the cases are really there
+    by_check = {}
+    for r in got:
+        by_check.setdefault(r["check"], []).append(r)
+    assert all(r["n_violations"] == 0 for r in by_check["zero"])
+    assert len(by_check["same_name"]) == 2 * len(by_check["zero"])
+    assert [r["part"] for r in by_check["table_level"] if r["n_violations"]] == [None]
+    assert {r["part"] for r in by_check["dup_key"] if r["n_rows"] is None} == (
+        {0, 1, 2} if resume else set()
+    )
+
 
 def test_cross_run_incremental_distinct_sketches(spark, tmp_path):
     """Two runs persist sketches of their own batches; the cumulative

@@ -121,3 +121,39 @@ def test_incremental_dedup_bucketed_store_saves_store_exchange(spark):
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_spread_to_parallelism_skips_well_split_inputs(spark, tmp_path):
+    """Known stats: a scan over at least defaultParallelism files is
+    returned untouched; a one-file input is still spread round-robin,
+    even when Spark cuts that file into defaultParallelism splits (its
+    single row group leaves all splits but one empty), and so is a
+    one-partition non-file input."""
+    from neontology_spark.bucketing import spread_to_parallelism
+
+    n = spark.sparkContext.defaultParallelism
+    wide_path = str(tmp_path / "wide.parquet")
+    spark.range(0, 50_000, 1, 2 * n).write.parquet(wide_path)
+    wide = spark.read.parquet(wide_path)
+    assert len(wide.inputFiles()) == 2 * n
+    assert spread_to_parallelism(wide, min_bytes=0) is wide
+
+    one_path = str(tmp_path / "one.parquet")
+    spark.range(0, 50_000, 1, 1).write.parquet(one_path)
+    one = spark.read.parquet(one_path)
+    (size,) = [f.stat().st_size for f in tmp_path.glob("one.parquet/*.parquet")]
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(size // n))
+    try:
+        assert one.rdd.getNumPartitions() >= n
+        spread = spread_to_parallelism(one, min_bytes=0)
+        assert spread is not one
+        assert spread.rdd.getNumPartitions() == n
+    finally:
+        spark.conf.set(key, old)
+
+    small = spark.range(0, 1_000, 1, 1)
+    spread = spread_to_parallelism(small, min_bytes=0)
+    assert spread is not small
+    assert spread.rdd.getNumPartitions() == n

@@ -291,3 +291,40 @@ def test_phash_consistency_null_stored_hash_flagged_not_crashed(spark):
 
     vio = {r["image_id"] for r in phash_violations(df, max_hamming=0).collect()}
     assert vio == {"img_1", "img_3"}
+
+
+def test_phash_consistency_int64_exact_beside_null_in_one_batch(spark):
+    """A NULL stored phash must not cost its batch neighbours their 64-bit
+    precision: pandas would carry the nullable column as float64 and round
+    a hash above 2**53. One partition, so both rows share one batch."""
+    from neontology_spark.images import _encode, _pixels
+    from neontology_spark.multimodal import (
+        dhash64,
+        phash_consistency,
+        phash_violations,
+        signed64,
+    )
+
+    big = 9223372036854775797  # 2**63 - 11: not representable as float64
+    blobs = [bytearray(_encode(_pixels(i, 40, 36), "png")) for i in range(2)]
+    df = spark.createDataFrame(
+        [("img_null", blobs[0], None), ("img_big", blobs[1], big)],
+        "image_id string, bytes binary, phash long",
+    ).coalesce(1)
+
+    rep = {r["image_id"]: r for r in phash_consistency(df).collect()}
+    assert rep["img_null"]["decode_ok"]
+    assert rep["img_null"]["stored_phash"] is None
+    assert rep["img_null"]["hamming"] is None
+    assert rep["img_big"]["stored_phash"] == big
+    recomputed = signed64(dhash64(_pixels(1, 40, 36)))
+    assert rep["img_big"]["recomputed_phash"] == recomputed
+    assert rep["img_big"]["hamming"] == bin((big ^ recomputed) & (2**64 - 1)).count("1")
+
+    # the same stored hash, when true, is consistent beside a NULL
+    df_ok = spark.createDataFrame(
+        [("img_null", blobs[0], None), ("img_ok", blobs[1], recomputed)],
+        "image_id string, bytes binary, phash long",
+    ).coalesce(1)
+    vio = {r["image_id"] for r in phash_violations(df_ok, max_hamming=0).collect()}
+    assert vio == {"img_null"}
